@@ -1,9 +1,9 @@
 """Standalone graph-family timing harness (r14 CPU-diet work).
 
-Runs the memo builds + the twelve q_graph_* keys serialized in one
-fresh session, reporting per-phase wall and executor CPU via bench's
-_CpuMeter — the same accounting bench.py charges, without the other
-296 keys. Usage:
+Runs the graph memo-group builds + the twelve q_graph_* keys
+serialized in one fresh session, reporting per-phase wall and executor
+CPU via bench's _CpuMeter — the same accounting bench.py charges,
+without the other 296 keys. Usage:
 
     python scripts/graph_bench.py [sf_dir] [key_prefix ...]
 """
@@ -37,6 +37,7 @@ spark = build_session(
 spark.sparkContext.setLogLevel("ERROR")
 bench._warmup(spark, SF)
 
+from sparkstreamingtohdfsofsensorsdata_spark.operators import graph  # noqa: E402
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all  # noqa: E402
 
 specs = {
@@ -60,9 +61,9 @@ def phase(name, fn):
     print(f"{name:36s} wall {wall:7.2f}  cpu {cpu:8.2f}", flush=True)
 
 
-phase("<edges+sym+degree>", lambda: bench._graph_materialize_edges(spark, SF))
-phase("<tri_orientation+corners>", lambda: bench._tri_materialize_orientation(spark, SF))
-phase("<cc_labels>", lambda: bench._graph_materialize_cc(spark, SF))
+phase("<edges+sym+degree>", lambda: graph.EDGES.build(spark, SF))
+phase("<tri_orientation+corners>", lambda: graph.TRIANGLES.build(spark, SF))
+phase("<cc_labels>", lambda: graph.CC.build(spark, SF))
 for name, spec in specs.items():
     phase(name, lambda s=spec: s.fn(spark, SF).write.format("noop").mode("overwrite").save())
 

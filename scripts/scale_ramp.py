@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+from sparkstreamingtohdfsofsensorsdata_spark import memo
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all
 from sparkstreamingtohdfsofsensorsdata_spark.session import build_session
 
@@ -100,23 +101,10 @@ def main() -> None:
                 ).save()
                 best = min(best, time.perf_counter() - start)
                 spark.catalog.clearCache()
-                # dedup owns its memo surface — private attr names here
-                # would silently stop clearing on a rename (review r6)
-                from sparkstreamingtohdfsofsensorsdata_spark.llm import (
-                    dedup,
-                    similarity,
-                )
-
-                dedup.clear_pair_memo(spark)
-                dedup.clear_label_memo(spark)
-                similarity.clear_exact_memo(spark)
-                from sparkstreamingtohdfsofsensorsdata_spark.operators import (
-                    graph,
-                )
-
-                graph.clear_edges_memo(spark)
-                graph.clear_orientation_memo(spark)
-                graph.clear_cc_memo(spark)
+                # the memo groups own their attribute names — private
+                # names here would silently stop clearing on a rename
+                for group in memo.GROUPS:
+                    group.clear(spark)
             times.append(round(best, 3))
         ratio = round(times[2] / times[0], 2) if times[0] > 0 else None
         rows.append({"key": key, "sf0.001": times[0], "sf0.01": times[1],

@@ -53,7 +53,9 @@ spark = build_session(
 )
 spark.sparkContext.setLogLevel("ERROR")
 
+from sparkstreamingtohdfsofsensorsdata_spark import memo  # noqa: E402
 from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup  # noqa: E402
+from sparkstreamingtohdfsofsensorsdata_spark.operators import graph  # noqa: E402
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all  # noqa: E402
 
 specs = load_all()
@@ -72,37 +74,29 @@ for tier, sf in TIERS.items():
     # per-key rows measure the kernels, not whichever key ran first
     # (the r16 first-cut ramp charged ~600 CPU-s of edge builds to
     # q_graph_common_neighbors and read as a false 18x)
-    dedup.clear_pair_memo(spark)
-    for attr in list(vars(spark).keys()):
-        if attr.endswith("_memo"):
-            getattr(spark, attr).clear()
+    for group in memo.GROUPS:
+        group.clear(spark)
     cursor = meter.sample()
     tier_out = {}
-    memo_phases = [
-        ("<graph edges+sym+degree>", lambda: bench._graph_materialize_edges(spark, sf)),
-        ("<tri orientation+corners>", lambda: bench._tri_materialize_orientation(spark, sf)),
-        ("<graph cc_labels>", lambda: bench._graph_materialize_cc(spark, sf)),
-        ("<simhash pairs>", lambda: bench._cc_materialize_pairs(spark, sf)),
-        ("<dedup cc labels>", lambda: bench._cc_materialize_labels(spark, sf)),
+    phases = [
+        ("<graph edges+sym+degree>", graph.EDGES.build),
+        ("<tri orientation+corners>", graph.TRIANGLES.build),
+        ("<graph cc_labels>", graph.CC.build),
+        ("<simhash pairs>", dedup.PAIRS.build),
+        ("<dedup cc labels>", dedup.LABELS.build),
+    ] + [
+        (name, lambda s, d, fn=specs[name].fn: fn(s, d).write.format("noop").mode("overwrite").save())
+        for name in KEYS
     ]
-    for pname, fn in memo_phases:
+    for pname, run in phases:
         t0 = time.perf_counter()
-        fn()
+        run(spark, sf)
         wall = time.perf_counter() - t0
         after = meter.sample()
         cpu = (after - cursor) if cursor is not None and after is not None else -1
         cursor = after
         tier_out[pname] = {"wall_s": round(wall, 3), "cpu_s": round(cpu, 3)}
         print(f"{tier:6s} {pname:30s} wall {wall:7.2f}  cpu {cpu:8.2f}", flush=True)
-    for name in KEYS:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        after = meter.sample()
-        cpu = (after - cursor) if cursor is not None and after is not None else -1
-        cursor = after
-        tier_out[name] = {"wall_s": round(wall, 3), "cpu_s": round(cpu, 3)}
-        print(f"{tier:6s} {name:30s} wall {wall:7.2f}  cpu {cpu:8.2f}", flush=True)
     results[tier] = tier_out
 
 print(json.dumps(results))

@@ -24,13 +24,12 @@ seeded RNG is involved anywhere.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import Memo, session_memo
 from ..registry import query
-from ..tables import _dir_fingerprint, load, spread
+from ..tables import load, spread
 
 N_MINHASH = 12  # 4 bands x 3 rows
 N_BANDS = 4
@@ -849,6 +848,7 @@ def q_llm_simhash_banded128(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("_simhash_sig_memo")
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized full-corpus signature table (doc_id, simhash)
     — the r15 shared-pass memo (VERDICT r14 item 3): the banded-pairs
@@ -856,19 +856,14 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     split + md5 + 64-bit fold over the whole corpus; now both read ONE
     lazily-checkpointed table. At 100 TB this IS the persisted
     signature index a dedup pipeline writes once and probes daily.
-    Cleared together with the pair memo (clear_pair_memo) so a
-    cold-payer bench rerun rebuilds the full chain its upfront payment
-    was charged for."""
-    cache = _memo(spark, "_simhash_sig_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        cache[key] = _simhash_df(
-            load(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-    return cache[key]
+    Part of the PAIRS group, so a cold-payer bench rerun rebuilds the
+    full chain its upfront payment was charged for."""
+    return _simhash_df(load(spark, sf_dir, "documents")).localCheckpoint(
+        eager=False
+    )
 
 
+@session_memo("_simhash_pairs_memo")
 def _simhash_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All (id_a < id_b, hamming) pairs within SIMHASH_HAMMING_MAX via
     the band-bucket join — shared by the banded query and the cluster
@@ -879,67 +874,25 @@ def _simhash_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite/bench run, and a production pipeline writes the pair table
     once and reads it downstream. The handle is a lazy localCheckpoint,
     so nothing materializes until the first consumer runs."""
-    cache = _memo(spark, "_simhash_pairs_memo")
-    key = memo_key(sf_dir)
-    if key in cache:
-        return cache[key]
-    _evict_same_path(cache, key)
-    pairs = _simhash_banded_pairs_plan(spark, sf_dir).localCheckpoint(eager=False)
-    cache[key] = pairs
-    return pairs
+    return _simhash_banded_pairs_plan(spark, sf_dir).localCheckpoint(eager=False)
 
 
-def _memo(spark: SparkSession, attr: str) -> dict:
-    cache = getattr(spark, attr, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, attr, cache)
-    return cache
-
-
-def memo_key(sf_dir: str) -> tuple:
-    """Memo key for the session-attached dedup caches: (path, file
-    fingerprint), like register_views — an in-place fixture rewrite
-    under the same path must not serve a stale checkpointed handle
-    (ADVICE r5). Exported so bench.py's payer-attribution logic checks
-    warmth with EXACTLY the key the memo will use (a truthiness check
-    would read a stale-fingerprint entry as warm and let the rebuild
-    land inside a consumer's timed region)."""
-    return (os.path.abspath(sf_dir), _dir_fingerprint(sf_dir))
-
-
-def _evict_same_path(cache: dict, key: tuple) -> None:
-    """Drop superseded entries for the same path before inserting a new
-    fingerprint: without this, every in-place fixture rewrite leaks one
-    more materialized checkpoint handle for the session's lifetime
-    (review r6). Dropping the dict reference is enough — localCheckpoint
-    blocks are released by the ContextCleaner once the DataFrame is
-    garbage-collected."""
-    path = key[0]
-    for stale in [k for k in cache if k[0] == path and k != key]:
-        del cache[stale]
-
-
-def pairs_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff _simhash_banded_pairs would be served from the memo."""
-    return memo_key(sf_dir) in getattr(spark, "_simhash_pairs_memo", {})
-
-
-def labels_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff _cc_labels would be served from the memo."""
-    return memo_key(sf_dir) in getattr(spark, "_cc_labels_memo", {})
-
-
-def clear_pair_memo(spark: SparkSession) -> None:
-    getattr(spark, "_simhash_pairs_memo", {}).clear()
-    # the signature memo is part of the pairs payer's charged chain —
-    # leaving it warm would make a cold-payer rerun look cheaper than
-    # the upfront payment it is audited against
-    getattr(spark, "_simhash_sig_memo", {}).clear()
-
-
-def clear_label_memo(spark: SparkSession) -> None:
-    getattr(spark, "_cc_labels_memo", {}).clear()
+# The signature table and the banded-pair table built on it; the pair
+# build is the banded query's own computation. q_llm_dedup_incremental
+# reads the signatures.
+PAIRS = Memo(
+    name="pairs",
+    parts=(simhash_signatures, _simhash_banded_pairs),
+    force=(_simhash_banded_pairs,),
+    payer="q_llm_simhash_banded",
+    consumers=(
+        "q_llm_simhash_banded",
+        "q_llm_dedup_clusters",
+        "q_llm_dedup_keep",
+        "q_llm_dedup_incremental",
+    ),
+)
+pairs_warm = PAIRS.warm  # public probe, read by perfbench/mix.py
 
 
 def _simhash_banded_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1373,6 +1326,7 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("_cc_labels_memo")
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label propagation over the banded-SimHash edge set (see
     q_llm_dedup_clusters docstring): returns (node, label) for every
@@ -1387,19 +1341,20 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     live in. The cache dies with the session object; `catalog.
     clearCache()` does not touch checkpoint blocks, so a memoized
     handle stays valid between queries in one suite/bench run."""
-    cache = _memo(spark, "_cc_labels_memo")
-    # Same (path, fingerprint) key as _simhash_pairs_memo / the view
-    # memo: rewritten fixtures invalidate the label handle (ADVICE r5);
-    # superseded same-path entries are evicted, not leaked.
-    key = memo_key(sf_dir)
-    if key in cache:
-        return cache[key]
-    _evict_same_path(cache, key)
-
     pairs = _simhash_banded_pairs(spark, sf_dir).select("id_a", "id_b")
-    labels = propagate_min_labels(pairs)
-    cache[key] = labels
-    return labels
+    return propagate_min_labels(pairs)
+
+
+# The CC label propagation over the pair table is the cluster query's
+# own computation; the keep query drops the labelled duplicates.
+LABELS = Memo(
+    name="labels",
+    parts=(_cc_labels,),
+    force=(_cc_labels,),
+    payer="q_llm_dedup_clusters",
+    consumers=("q_llm_dedup_clusters", "q_llm_dedup_keep"),
+)
+labels_warm = LABELS.warm  # public probe, read by perfbench/mix.py
 
 
 def propagate_min_labels(

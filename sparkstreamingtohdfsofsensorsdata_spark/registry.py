@@ -72,6 +72,7 @@ def query(
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
+        wrapped.__module__ = fn.__module__
         # next(iter(...), "") tolerates a whitespace-only docstring — a
         # bare [0] here would IndexError at import time and take the
         # whole registry down with it.

@@ -164,7 +164,9 @@ def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> Non
     re-register happens only on a CHANGE of sf_dir, a change of the
     files under it (size/mtime fingerprint), or ``force=True``.
     """
-    key = (os.path.abspath(sf_dir), _dir_fingerprint(sf_dir))
+    from .memo import memo_key
+
+    key = memo_key(sf_dir)
     if not force and getattr(spark, "_views_registered_for", None) == key:
         # The memo can go stale if a caller drops or shadows one of the
         # views; a cheap catalog existence check catches that without

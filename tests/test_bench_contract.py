@@ -12,6 +12,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import bench
@@ -121,35 +123,52 @@ def test_stdout_line_mass_failure_still_fits():
     assert len(line) <= bench._STDOUT_BUDGET
 
 
-def test_cc_payer_attribution_is_rotation_independent(spark):
-    # The pair-build and label-propagation costs must land on their
-    # canonical payers no matter which family member the verification
-    # rotation puts first: a consumer hitting a cold memo triggers the
-    # payer-charged materialization, after which the memo is warm and
-    # every member (payers included) runs marginal.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup
+def test_py_cpu_meter_counts_own_workers_per_process():
+    # ADVICE r17: only python daemon/worker processes descending from
+    # this process count (another Spark app's workers must not inflate
+    # the figure), keyed on (pid, starttime) so a reused pid is a new
+    # process, not a counter that went backwards. Synthetic table:
+    # pid -> (ppid, starttime, utime+stime ticks, cmdline).
+    meter = bench._PyCpuMeter(root=100)
+    meter._tck = 100
+    daemon = b"/usr/bin/python3\0-m\0pyspark.daemon\0"
+    worker = b"python3\0-m\0pyspark.worker\0"
+    table = {
+        100: (1, 5, 0, b"python3\0bench.py\0"),
+        200: (100, 6, 900, b"java\0-cp\0spark\0"),  # our JVM
+        300: (200, 7, 50, daemon),
+        301: (300, 8, 150, worker),
+        400: (1, 9, 0, b"java\0-cp\0spark\0"),  # another application
+        401: (400, 10, 700, daemon),
+        402: (401, 11, 700, worker),
+        # a shell whose command string merely mentions the module
+        500: (100, 12, 300, b"/bin/sh\0-c\0python -m pyspark.daemon\0"),
+    }
+    assert meter._tally(table) == pytest.approx(2.0)
+    # worker 301 exits and a new worker of ours reuses its pid: the dead
+    # worker keeps its last count, the new one adds its own
+    table[301] = (300, 13, 20, worker)
+    assert meter._tally(table) == pytest.approx(2.2)
+    # a process's count never goes backwards
+    table[300] = (200, 7, 40, daemon)
+    assert meter._tally(table) == pytest.approx(2.2)
 
-    sf_dir = "/root/testdata/sf0.001"
-    dedup.clear_pair_memo(spark)
-    dedup.clear_label_memo(spark)
-    try:
-        assert bench._cc_pairs_cold(spark, sf_dir)
-        assert bench._cc_labels_cold(spark, sf_dir)
-        assert bench._cc_materialize_pairs(spark, sf_dir) > 0
-        assert not bench._cc_pairs_cold(spark, sf_dir)
-        # pairs alone leave labels cold
-        assert bench._cc_labels_cold(spark, sf_dir)
-        assert bench._cc_materialize_labels(spark, sf_dir) > 0
-        assert not bench._cc_labels_cold(spark, sf_dir)
-        # warmth is fingerprint-exact: another sf_dir is still cold even
-        # though the memo dict is non-empty (the stale-entry trap)
-        assert bench._cc_pairs_cold(spark, "/root/testdata/sf0.01")
-        assert bench.CC_PAYER_PAIRS == "q_llm_simhash_banded"
-        assert bench.CC_PAYER_LABELS == "q_llm_dedup_clusters"
-        assert set(bench.CC_LABEL_CONSUMERS) < set(bench.CC_FAMILY)
-        assert bench.CC_PAYER_PAIRS in bench.CC_FAMILY
-    finally:
-        # the session-scoped fixture outlives this test: a mid-test
-        # assertion failure must not leave warm handles for later tests
-        dedup.clear_pair_memo(spark)
-        dedup.clear_label_memo(spark)
+
+def test_bench_names_used_by_scripts_and_tests_exist():
+    # scripts/*.py do their work at import time, so no test imports
+    # them: pin every ``bench.<name>`` they and the tests reference to a
+    # real attribute, so deleting a bench helper cannot strand a caller.
+    import ast
+
+    root = Path(__file__).resolve().parent.parent
+    refs = set()
+    for path in [*root.glob("scripts/*.py"), *root.glob("tests/*.py")]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "bench"
+            ):
+                refs.add((path.name, node.attr))
+    assert refs
+    assert sorted(r for r in refs if not hasattr(bench, r[1])) == []

@@ -230,40 +230,13 @@ def test_triangle_orientation_probe_both_ways(spark):
         assert row.n_nodes == 62 and row.n_edges == 67
 
 
-def test_orientation_memo_single_probe(spark):
-    """r12: both wedge consumers share ONE memoized orientation
-    decision per (session, sf) — the second caller must hit the memo
-    (bench charges the single probe to TRI_PAYER, so attribution is
-    rotation-stable only if the memo actually holds), and clearing
-    re-arms it."""
+def test_tri_payer_in_bench_family():
+    """The memo groups must stay in sync with the graph module: the
+    triangle consumers are graph-edge consumers (the edges prepay runs
+    first, so the probe never pays the edge build) and the payer is the
+    triangle key."""
     from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
 
-    sf = "/root/testdata/sf0.001"
-    graph.clear_orientation_memo(spark)
-    assert not graph.orientation_warm(spark, sf)
-    first = graph.triangle_orientation(spark, sf)
-    # r13/r16: TRI_PAYER warmth = probe AND the folded triangle
-    # node-count table (both are TRI-charged intermediates)
-    assert not graph.orientation_warm(spark, sf)
-    counts = graph.triangle_node_counts(spark, sf)
-    assert graph.orientation_warm(spark, sf)
-    # memo hit: the same objects come back, no recompute
-    assert graph.triangle_orientation(spark, sf) is first
-    assert graph.triangle_node_counts(spark, sf) is counts
-    graph.clear_orientation_memo(spark)
-    assert not graph.orientation_warm(spark, sf)
-
-
-def test_tri_payer_in_bench_family():
-    """The bench prepay tables must stay in sync with the graph module:
-    TRI_FAMILY ⊆ GRAPH_FAMILY (edges prepay runs first, so the probe
-    never pays the edge build) and the payer is the triangle key."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import bench
-
-    assert set(bench.TRI_FAMILY) <= set(bench.GRAPH_FAMILY)
-    assert bench.TRI_PAYER == "q_graph_triangles"
-    assert bench.TRI_PAYER in bench.TRI_FAMILY
+    assert set(graph.TRIANGLES.consumers) <= set(graph.EDGES.consumers)
+    assert graph.TRIANGLES.payer == "q_graph_triangles"
+    assert graph.TRIANGLES.payer in graph.TRIANGLES.consumers

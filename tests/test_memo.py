@@ -11,14 +11,17 @@ lifetime is wrong. Pin the two contracts:
   handles (they die with the session that owns the checkpoint blocks).
 
 Also pins the register_views fingerprint (ADVICE r4): rewriting a
-fixture file in place must invalidate the view memo.
+fixture file in place must invalidate the view memo, and the contract of
+every payer-charged memo group (memo.GROUPS) bench.py attributes by.
 """
 
 from __future__ import annotations
 
 import os
 
-from sparkstreamingtohdfsofsensorsdata_spark import registry
+import pytest
+
+from sparkstreamingtohdfsofsensorsdata_spark import memo, registry
 from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import _cc_labels
 from sparkstreamingtohdfsofsensorsdata_spark.tables import _dir_fingerprint
 
@@ -108,7 +111,7 @@ def test_dedup_memos_evict_superseded_same_path_entries(spark):
     # times would otherwise leak N materialized checkpoint handles
     # (review r6). Simulate the rewrite by planting a stale-fingerprint
     # entry under the same path and recomputing.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import memo_key
+    from sparkstreamingtohdfsofsensorsdata_spark.memo import memo_key
 
     _clear_memos(spark)
     _cc_labels(spark, SF_A)
@@ -222,13 +225,9 @@ def test_graph_family_docstring_in_sync():
     """VERDICT r10 item 5: the copurchase_edges docstring enumerates the
     graph kernels that share the edge memo; this assertion makes the
     enumeration (and its spelled-out count) structurally equal to
-    bench.GRAPH_FAMILY so the r9/r10 drift class cannot recur."""
+    graph.EDGES.consumers so the r9/r10 drift class cannot recur."""
     import re
-    import sys
-    from pathlib import Path
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import bench
     from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
 
     doc = graph.copurchase_edges.__doc__
@@ -236,46 +235,99 @@ def test_graph_family_docstring_in_sync():
     assert m, "docstring lost its kernel enumeration"
     names = re.findall(r"[a-z][a-z-]+", m.group(1))
     assert {"q_graph_" + n.replace("-", "_") for n in names} == set(
-        bench.GRAPH_FAMILY
+        graph.EDGES.consumers
     )
     count_word = re.search(r"all (\w+) graph kernels", doc).group(1)
     words = {7: "seven", 8: "eight", 9: "nine", 10: "ten",
              11: "eleven", 12: "twelve"}
-    assert count_word == words[len(bench.GRAPH_FAMILY)]
+    assert count_word == words[len(graph.EDGES.consumers)]
 
 
-def test_graph_shared_layer_memos(spark):
-    """r13 CPU diet (+ r14 adjacency arrays): the five shared graph
-    intermediates (symmetric adjacency, degree table, adjacency
-    arrays, closed-triangle corners, CC labels) are each built ONCE
-    per (session, sf) — the second call returns the same object — and
-    the clear functions re-arm their whole layer (edges clear drops
-    sym+degree+arrays too: serving them warm over a cold edge table
-    would split bench attribution)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
+@pytest.mark.parametrize("group", memo.GROUPS, ids=lambda g: g.name)
+def test_memo_group_contract(spark, group):
+    """The contract bench.py's payer attribution rests on, for every
+    memo group: cold after a clear; ``build`` warms it (one part alone
+    does not) and nothing declared after it; later calls of each part
+    return the same object; warmth is fingerprint-exact; ``clear`` makes
+    it cold and leaves every other group as it was, including the
+    groups built on it (serving those warm is their own payer's
+    business)."""
+    groups = list(memo.GROUPS)
+    later = groups[groups.index(group) + 1 :]
+    for g in groups:
+        g.clear(spark)
+    try:
+        assert not group.warm(spark, SF_A)
+        if len(group.parts) > 1:
+            group.parts[0](spark, SF_A)
+            assert not group.warm(spark, SF_A)
+        assert group.build(spark, SF_A) > 0
+        assert group.warm(spark, SF_A)
+        # the pair build leaves the labels cold, the edge build the
+        # triangle table, ...
+        assert not any(g.warm(spark, SF_A) for g in later)
+        # a group's readers are a strict subset of the readers of every
+        # group it is built from
+        assert group.payer in group.consumers
+        for g in groups:
+            if g is not group and any(p.warm(spark, SF_A) for p in g.parts):
+                assert set(group.consumers) < set(g.consumers), g.name
+        for part in group.parts:
+            assert part(spark, SF_A) is part(spark, SF_A)
+        # another sf_dir is still cold although the memo dicts are not
+        # empty (the stale-entry trap)
+        assert not group.warm(spark, SF_B)
+        for g in later:
+            if set(g.consumers) <= set(group.consumers):
+                g.build(spark, SF_A)
+        others = [g for g in groups if g is not group]
+        before = [g.warm(spark, SF_A) for g in others]
+        group.clear(spark)
+        assert not group.warm(spark, SF_A)
+        assert [g.warm(spark, SF_A) for g in others] == before
+    finally:
+        for g in groups:
+            g.clear(spark)
 
-    sf = "/root/testdata/sf0.001"
-    graph.clear_edges_memo(spark)
-    graph.clear_orientation_memo(spark)
-    graph.clear_cc_memo(spark)
-    assert not graph.edges_warm(spark, sf)
-    sym = graph.sym_edges(spark, sf)
-    deg = graph.degree_table(spark, sf)
-    adj = graph.adj_arrays(spark, sf)
-    assert graph.edges_warm(spark, sf)
-    assert graph.sym_edges(spark, sf) is sym
-    assert graph.degree_table(spark, sf) is deg
-    assert graph.adj_arrays(spark, sf) is adj
-    labels = graph.cc_labels_graph(spark, sf)
-    assert graph.cc_warm(spark, sf)
-    assert graph.cc_labels_graph(spark, sf) is labels
-    # clearing the edge layer drops all three edge-layer memos
-    graph.clear_edges_memo(spark)
-    assert not graph.edges_warm(spark, sf)
-    # the CC memo has its own payer and its own clear
-    assert graph.cc_warm(spark, sf)
-    graph.clear_cc_memo(spark)
-    assert not graph.cc_warm(spark, sf)
+
+def test_memo_payers_are_the_keys_that_compute_them():
+    assert {g.name: g.payer for g in memo.GROUPS} == {
+        "graph_edges": "q_graph_degree",
+        "tri_orient": "q_graph_triangles",
+        "graph_cc": "q_graph_wcc",
+        "pairs": "q_llm_simhash_banded",
+        "labels": "q_llm_dedup_clusters",
+        "ann_exact": "q_llm_sim_topk",
+    }
+
+
+def test_memo_consumers_are_every_reader(spark):
+    """Derive the readers instead of trusting the lists: construct every
+    key of the memo-owning modules against cold memos; every part that
+    turned warm must belong to a group that lists the key — bench.py's
+    in-loop safety net only covers listed consumers."""
+    owners = {
+        "sparkstreamingtohdfsofsensorsdata_spark." + m
+        for m in ("operators.graph", "llm.dedup", "llm.similarity")
+    }
+    specs = [s for s in registry.load_all().values() if s.fn.__module__ in owners]
+    assert len(specs) > 30
+    unlisted = []
+    try:
+        for spec in specs:
+            for g in memo.GROUPS:
+                g.clear(spark)
+            spec.fn(spark, SF_A)
+            unlisted += [
+                (spec.name, g.name)
+                for g in memo.GROUPS
+                if spec.name not in g.consumers
+                and any(p.warm(spark, SF_A) for p in g.parts)
+            ]
+    finally:
+        for g in memo.GROUPS:
+            g.clear(spark)
+    assert not unlisted
 
 
 def test_survey_s2_is_one_to_one_with_registry():

@@ -1426,11 +1426,11 @@ def test_triangle_corners_are_array_intersection(spark):
     third self-join of the oriented edge list (two joins annotate the
     arrays; the old closing wedge join is gone)."""
     from sparkstreamingtohdfsofsensorsdata_spark.operators.graph import (
-        clear_orientation_memo,
+        TRIANGLES,
         triangle_node_counts,
     )
 
-    clear_orientation_memo(spark)
+    TRIANGLES.clear(spark)
     # inspect the UNCHECKPOINTED build plan by reproducing it pre-memo:
     # the memoized handle is a LogicalRDD that hides the build
     df = triangle_node_counts(spark, SF)

@@ -47,7 +47,10 @@ def _write_chunk(df, dest: str):
     import glob as _glob
     import shutil as _shutil
 
-    tmp = dest + "_tmpdir"
+    # "_"-prefixed, so a running stream's listing of the destination
+    # directory skips the temp dir instead of racing its removal
+    head, name = os.path.split(dest)
+    tmp = os.path.join(head, f"_{name}_tmpdir")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     (part,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
     os.replace(part, dest)
