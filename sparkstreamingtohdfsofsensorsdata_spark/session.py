@@ -16,12 +16,16 @@ Design notes (scale-first):
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "sparkstreamingtohdfsofsensorsdata-spark"
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_ROOT = os.path.dirname(_PKG_DIR)
 
 
 def scratch_dir(prefix: str = "scratch_") -> str:
@@ -86,22 +90,108 @@ def _package_zip() -> str:
         return _PKG_ZIP
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
     zpath = os.path.join(
         tempfile.mkdtemp(prefix="pkgship_"), "sparkstreamingtohdfsofsensorsdata_spark.zip"
     )
     with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
+        for dirpath, _dirs, files in os.walk(_PKG_DIR):
             for fname in files:
                 if fname.endswith(".py"):
                     full = os.path.join(dirpath, fname)
-                    z.write(full, os.path.relpath(full, root))
+                    z.write(full, os.path.relpath(full, _ROOT))
     _PKG_ZIP = zpath
     return zpath
 
 
 FASTDAEMON_MODULE = "sparkstreamingtohdfsofsensorsdata_spark.fastdaemon"
+NIO_FS_CLASS = "sparkgraft.fs.NioLocalFileSystem"
+JVM_CLASSES = os.path.join(_ROOT, "jvm", "classes")
+
+
+def spark_jars() -> str:
+    """The ``jars`` directory of the Spark install the JVM launches from."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    return os.path.join(_find_spark_home(), "jars")
+
+
+def compile_java(source: str, classpath: str) -> str | None:
+    """Compiled classes of one ``jvm/`` source file, built at most once.
+
+    The classes directory is ``jvm/classes/<stem>-<hash>``, where the
+    hash covers the source text and ``classpath``: an existing directory
+    is current, and an edited source or another Spark install gets a new
+    one. javac writes into a temp dir that is then renamed into place,
+    so concurrent processes never see a half-written directory and the
+    loser of a race just drops its copy. Returns None, never raises,
+    when the source is not on disk (zip or wheel deploy), there is no
+    JDK, or javac fails.
+    """
+    import hashlib
+    import shutil
+    import subprocess
+
+    try:
+        with open(source, "rb") as f:
+            digest = hashlib.sha1(f.read() + classpath.encode()).hexdigest()
+    except OSError:
+        return None
+    stem = os.path.splitext(os.path.basename(source))[0]
+    target = os.path.join(JVM_CLASSES, f"{stem}-{digest[:16]}")
+    if os.path.isdir(target):
+        return target
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    try:
+        os.makedirs(JVM_CLASSES, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{stem}-", dir=JVM_CLASSES)
+    except OSError:
+        return None
+    try:
+        proc = subprocess.run(
+            [javac, "-nowarn", "-encoding", "UTF-8", "-cp", classpath,
+             "-d", tmp, source],
+            capture_output=True,
+        )
+        if proc.returncode != 0:
+            logging.getLogger(__name__).warning(
+                "javac failed on %s: %s", source, proc.stderr.decode()[-2000:]
+            )
+        else:
+            os.chmod(tmp, 0o755)  # mkdtemp makes it 0700
+            try:
+                os.rename(tmp, target)
+            except OSError:
+                pass  # another process renamed its copy first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return target if os.path.isdir(target) else None
+
+
+def _nio_fs_classes() -> str | None:
+    """Classes dir of ``jvm/sparkgraft/fs/NioLocalFileSystem.java``, or
+    None when it cannot be used: not compiled (see ``compile_java``), or
+    a JVM already runs without it (the driver classpath is fixed at JVM
+    launch, and naming a missing class in ``fs.file.impl`` would break
+    every local file access)."""
+    import glob
+
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    jars = glob.glob(os.path.join(spark_jars(), "hadoop-client-api-*.jar"))
+    if not jars:
+        return None
+    source = os.path.join(_ROOT, "jvm", "sparkgraft", "fs", "NioLocalFileSystem.java")
+    classes = compile_java(source, os.pathsep.join(sorted(jars)))
+    gateway = SparkContext._gateway
+    if classes is not None and gateway is not None:
+        try:
+            gateway.jvm.java.lang.Class.forName(NIO_FS_CLASS)
+        except Py4JError:
+            return None
+    return classes
 
 
 def _fastdaemon_available() -> bool:
@@ -109,26 +199,36 @@ def _fastdaemon_available() -> bool:
     importable by the Python worker processes — which requires the
     package's parent directory on the PYTHONPATH **environment
     variable** (the daemon is a fresh ``python -m`` process; the
-    driver's sys.path does not reach it). Exports the path when the
-    JVM has not launched yet; if a JVM is already up without it, the
-    daemon module could not import, so report False and leave the
-    stock daemon in place (r17, see fastdaemon.py for the measured
-    rationale)."""
+    driver's sys.path does not reach it). ``build_session`` exports it
+    when the JVM has not launched yet; if a JVM is already up without
+    it, the daemon module could not import, so the stock daemon stays
+    (r17, see fastdaemon.py for the measured rationale)."""
     from pyspark import SparkContext
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.isfile(os.path.join(pkg_dir, "fastdaemon.py")):
+    if not os.path.isfile(os.path.join(_PKG_DIR, "fastdaemon.py")):
         return False  # running from a zip/egg: not reachable by -m
-    root = os.path.dirname(pkg_dir)
-    current = os.environ.get("PYTHONPATH", "")
-    if root in current.split(os.pathsep):
+    if SparkContext._gateway is None:
         return True
-    if SparkContext._gateway is not None:
-        return False  # JVM env is frozen and lacks the path
-    os.environ["PYTHONPATH"] = (
-        current + os.pathsep + root if current else root
-    )
-    return True
+    return _ROOT in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+
+
+def _local_fast_path_conf(master: str) -> dict[str, str]:
+    """Conf for the two fast paths that only hold when the executors are
+    threads of this driver's JVM and its Python workers run on this
+    host: the warm-fork Python daemon and the fork-free local
+    filesystem. Empty for any other master, and for each path whose
+    code cannot be reached (see the two predicates above)."""
+    if not master.startswith("local"):
+        return {}
+    conf = {}
+    if _fastdaemon_available():
+        conf["spark.python.daemon.module"] = FASTDAEMON_MODULE
+    classes = _nio_fs_classes()
+    if classes is not None:
+        conf["spark.driver.extraClassPath"] = classes
+        conf["spark.hadoop.fs.file.impl"] = NIO_FS_CLASS
+        conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] = NIO_FS_CLASS + "$Fs"
+    return conf
 
 
 def build_session(
@@ -206,19 +306,30 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    # Warm-fork Python daemon (r17, guide §4.5): workers are forked
-    # from a daemon that already imported numpy/pandas/pyarrow and
-    # applied workerfast.activate(), so respawned workers (the JVM
-    # reaps the idle pool after a hardcoded 1 minute) cost a bare fork
-    # instead of ~0.6 CPU-s of imports, and no task anywhere pays the
-    # per-task zip re-scan / full-gc fixed costs. Gated on the module
-    # being importable by the worker processes — see fastdaemon.py.
-    if _fastdaemon_available():
-        builder = builder.config(
-            "spark.python.daemon.module", FASTDAEMON_MODULE
-        )
+    # Local-master fast paths (see _local_fast_path_conf):
+    # - Warm-fork Python daemon (r17, guide §4.5): workers are forked
+    #   from a daemon that already imported numpy/pandas/pyarrow and
+    #   applied workerfast.activate(), so respawned workers (the JVM
+    #   reaps the idle pool after a hardcoded 1 minute) cost a bare fork
+    #   instead of ~0.6 CPU-s of imports, and no task anywhere pays the
+    #   per-task zip re-scan / full-gc fixed costs. See fastdaemon.py.
+    # - Fork-free local filesystem (jvm/sparkgraft/fs): without libhadoop,
+    #   Hadoop forks chmod/readlink on every checkpoint, state-store and
+    #   part-file create/rename: 50-100 forks per micro-batch in the
+    #   perfbench streams.
+    conf = _local_fast_path_conf(master)
     for key, value in (extra_conf or {}).items():
+        if key == "spark.driver.extraClassPath" and key in conf:
+            value = value + os.pathsep + conf[key]
+        conf[key] = value
+    for key, value in conf.items():
         builder = builder.config(key, value)
+    if conf.get("spark.python.daemon.module") == FASTDAEMON_MODULE:
+        current = os.environ.get("PYTHONPATH", "")
+        if _ROOT not in current.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                current + os.pathsep + _ROOT if current else _ROOT
+            )
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -30,7 +30,10 @@ from ..session import scratch_dir
 # a real cluster size it ~2-3x executor count so state shards across
 # the fleet; on this single node, 32 HDFS-backed stores per stateful
 # operator is pure setup/commit overhead (measured: tumbling 7.0s ->
-# 0.8s, stream-stream join 5.3s -> 2.1s going 32 -> 8).
+# 0.8s, stream-stream join 5.3s -> 2.1s going 32 -> 8). Those timings
+# predate the fork-free local filesystem (session.build_session): each
+# state-store file then forked chmod and readlink, so a store's commit
+# cost more than it does now. Not re-measured.
 STREAM_STATE_PARTITIONS = 8
 
 
@@ -84,10 +87,12 @@ def run_to_memory(
     """
     prev_parts = _prepare_streaming_session(result)
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    # Explicit tmpfs checkpoint: state-store commits are fsync-heavy and
-    # this checkpoint is run-scoped (availableNow to completion), so RAM
-    # is the right place — a restartable deployment would point this at
-    # HDFS/S3 instead (write_file_sink does).
+    # Explicit tmpfs checkpoint: state-store commits looked fsync-heavy
+    # (measured while Hadoop still forked chmod/readlink for every
+    # checkpoint file, which was most of that cost) and this checkpoint
+    # is run-scoped (availableNow to completion), so RAM is the right
+    # place — a restartable deployment would point this at HDFS/S3
+    # instead (write_file_sink does).
     ckpt = scratch_dir("ckpt_")
     # start() itself can throw (unsupported plan/output-mode combo) —
     # it must sit INSIDE the try, or the finally never restores the

@@ -689,30 +689,22 @@ def test_upsert_mergeinto_commits_on_v2_catalog():
     subprocess because spark.driver.extraClassPath only takes effect
     at JVM launch; compiles jvm/sparkgraft/mem/MemCatalog.java on
     demand (skip if no JDK)."""
+    import os
     import shutil
     import subprocess
     import sys
     from pathlib import Path
 
-    import pyspark
+    from sparkstreamingtohdfsofsensorsdata_spark.session import compile_java, spark_jars
 
     repo = Path(__file__).resolve().parent.parent
     src = repo / "jvm" / "sparkgraft" / "mem" / "MemCatalog.java"
-    classes = repo / "jvm" / "classes"
-    cls = classes / "sparkgraft" / "mem" / "MemCatalog.class"
-    if not cls.exists() or cls.stat().st_mtime < src.stat().st_mtime:
-        javac = shutil.which("javac")
-        if javac is None:
-            pytest.skip("no JDK: cannot compile the row-level catalog")
-        jars = Path(pyspark.__file__).parent / "jars"
-        subprocess.run(
-            [javac, "-encoding", "UTF-8", "-cp", f"{jars}/*",
-             "-d", str(classes), str(src)],
-            check=True,
-            capture_output=True,
-        )
+    if shutil.which("javac") is None:
+        pytest.skip("no JDK: cannot compile the row-level catalog")
+    classes = compile_java(str(src), os.path.join(spark_jars(), "*"))
+    assert classes is not None, f"javac failed on {src}"
     proc = subprocess.run(
-        [sys.executable, str(repo / "tests" / "memcat_driver.py"), str(classes)],
+        [sys.executable, str(repo / "tests" / "memcat_driver.py"), classes],
         capture_output=True,
         text=True,
         timeout=300,
