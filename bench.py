@@ -210,18 +210,13 @@ def _warmup(spark, sf_dir: str) -> None:
 
     @pandas_udf("double")
     def _identity(s: pd.Series) -> pd.Series:
-        # r17 (VERDICT r16 items 3+6): spawn AND fast-path every worker
-        # up front — numpy/pyarrow imports land here (the heavy-library
-        # init several kernels pay on their first key otherwise), and
-        # workerfast.activate() pins the per-task fixed costs (zip
-        # re-scan + full gc) down for the whole bench, so per-key
-        # py_cpu_s reads kernel work, not worker boot.
+        # spawn every worker up front with numpy/pyarrow imported (the
+        # heavy-library init several kernels pay on their first key
+        # otherwise), so per-key py_cpu_s reads kernel work, not worker
+        # boot
         import numpy  # noqa: F401
         import pyarrow  # noqa: F401
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         return s
 
     n_par = spark.sparkContext.defaultParallelism

@@ -1,6 +1,6 @@
 """Drop-in ``spark.python.daemon.module``: warm, patched worker forks.
 
-The stock worker lifecycle has two fixed costs this engine keeps
+The stock worker lifecycle has three fixed costs this engine keeps
 paying at every scale (measured r17, local[32], Spark 4.1, CPython
 3.11):
 
@@ -12,33 +12,42 @@ paying at every scale (measured r17, local[32], Spark 4.1, CPython
   run interleaves long JVM-only stretches with Python stages, so the
   pool is reaped and respawned repeatedly (visible as multi-second
   ``py_cpu_s`` on whichever key runs after a JVM-only stretch).
-- **Per-task fixed work.** The per-task ``importlib.invalidate_caches``
-  zip re-scan and the daemon loop's full ``gc.collect`` —
-  ``workerfast.activate`` (same package) removes both, but only after
-  the first task of one of OUR kernels runs in that worker; a fresh
-  fork serving someone else's UDF first still pays.
+- **Per-task zip re-scan, ~115 ms/task.**
+  ``pyspark.worker_util.setup_spark_files`` calls
+  ``importlib.invalidate_caches()`` once per task, and CPython 3.11's
+  ``zipimport.zipimporter.invalidate_caches`` EAGERLY re-reads the zip
+  central directory — so the ~107k-entry ``pyspark.zip`` plus the py4j
+  zip on every worker's ``sys.path`` are re-parsed on every task (the
+  profile shows ``zipimport._read_directory`` dominating worker main).
+- **Per-task full gc, ~40 ms/task.** The daemon loop runs a full
+  ``gc.collect()`` after every task over the worker's ~73k-object
+  import baseline.
 
-This module wraps the stock ``pyspark.daemon`` so the DAEMON process
-itself pre-imports the heavy libraries and the worker main loop, then
-applies ``workerfast.activate()`` once — every subsequently forked
-worker inherits the warm imports, the patched zipimporters, and the
-frozen baseline via fork copy-on-write. Respawn cost collapses to a
-bare ``fork()``; no worker ever pays the per-task fixed costs, no
-matter whose UDF it serves first. The freeze has a second effect worth
-naming: without it, the first full gc in a fork walks every inherited
-object's gc header and copy-on-write-unshares the whole baseline heap
-(the classic CPython fork-memory trap); frozen objects are never
-walked, so the ~150 MB import baseline stays physically shared across
-all 32 workers.
+Together the last two cost every Python-touching task ~150 ms of
+worker CPU whatever its eval type and data size (a 32-task passthrough
+``mapInArrow`` stage: ~5.0 Python-CPU-s doing nothing, ~0.1 here).
 
-Failure posture: ``_prewarm`` is wrapped defensively — a missing
-optional library degrades to the stock behavior, never a dead daemon.
-Deployment: ``session.build_session`` sets the conf only when this
-package is importable from a real directory on the worker hosts'
-PYTHONPATH (trivially true in local mode, where it also exports the
-path before the JVM launches); a cluster deploy that pip-installs the
-package on executors gets the same win by setting the same two
-settings (PYTHONPATH is then already correct).
+This module wraps the stock ``pyspark.daemon`` so the DAEMON process,
+once, before the first fork: pre-imports the heavy libraries, the
+worker main loop and the operator surface; replaces
+``invalidate_caches`` with a no-op on the zipimporters cached so far
+(the distro zips are immutable for the life of the application; a zip
+added later by ``addPyFile`` gets a fresh finder that still
+invalidates); and ``gc.freeze()``s the live heap, so the per-task
+collect scans only objects allocated after the fork. Every worker
+inherits all three by fork copy-on-write and never freezes again, so
+no cycle a task leaves behind is pinned. The freeze also keeps the
+~150 MB import baseline physically shared: without it, the first full
+gc in a fork walks every inherited object's gc header and
+copy-on-write-unshares the whole heap.
+
+This is the only home of the fast path. ``session.build_session`` sets
+the conf only for a ``local*`` master whose workers can import this
+package from a directory; anywhere else workers run stock PySpark,
+correct but without the per-task saving (a cluster deploy that
+pip-installs the package can opt in by setting the conf itself). Each
+``_prewarm`` step is guarded: a missing optional library degrades to
+the stock behavior, never a dead daemon.
 
 Launch protocol note: ``pyspark.daemon`` resolves the WORKER module
 from ``sys.argv[1]`` at its own import time (the factory launches
@@ -48,6 +57,10 @@ including the separate Python-data-source worker modules.
 """
 
 from __future__ import annotations
+
+import gc
+import sys
+import zipimport
 
 
 def _prewarm() -> None:
@@ -74,11 +87,12 @@ def _prewarm() -> None:
     except Exception:  # pragma: no cover
         pass
     try:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
+        for finder in list(sys.path_importer_cache.values()):
+            if isinstance(finder, zipimport.zipimporter):
+                finder.invalidate_caches = lambda: None
     except Exception:  # pragma: no cover
         pass
+    gc.freeze()
 
 
 _prewarm()

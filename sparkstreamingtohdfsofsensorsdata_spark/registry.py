@@ -97,17 +97,18 @@ def query(
 
 # External harnesses may verify only a prefix of the registry (observed:
 # the grading driver checks 50 keys/round in load_all() order), so ORDER
-# ENCODES NEED. Round-17 rotation (VERDICT r16 item 1): round 16
-# rewrote the physical plans of 17 keys (Arrow simhash/minhash kernels,
-# the graph broadcast-cap family, the executor-side update_mode fold)
-# but only 2 of them fell inside the r16 driver window — the
-# independent oracle has not re-judged the rewrites. The head is
-# therefore (a) the 17-key blast radius, pinned in ROTATION_BLAST_HEAD
-# below (VERDICT order), then (b) the 34-key r10-stale cohort
-# (alphabetical, oldest standing driver verdicts) truncated at the
-# 50-key boundary; its last key queues at position 51 for r18. Every
-# queued key is covered by the zero-tolerance exact sweeps at
-# sf0.001/0.01/0.1 (Arrow-fetched oracle, driver-grade types).
+# ENCODES NEED. Round-18 rotation (VERDICT r17 item 1): round 17
+# rewrote the plans of heavy hitters, basket pairs and the alert FSM
+# and moved the graph family onto one copurchase_edges shuffle, and the
+# worker fast path moved out of 22 worker bodies into the warm-fork
+# daemon (fastdaemon.py) — the independent oracle has not re-judged
+# either. The head is therefore (a) that blast radius, pinned in
+# ROTATION_BLAST_HEAD below, then (b) the r10-stale key and the
+# r11-stale cohort (alphabetical, oldest standing driver verdicts)
+# truncated at the 50-key boundary; the cohort's tail queues at
+# positions 51+ for r19. Every queued key is covered by the
+# zero-tolerance exact sweeps at sf0.001/0.01/0.1 (Arrow-fetched
+# oracle, driver-grade types).
 #
 # ROTATION_ROUND pins WHICH driver artifacts this window was computed
 # from: all committed CORRECTNESS_r*.json with round < ROTATION_ROUND.
@@ -115,77 +116,97 @@ def query(
 # the suite stays green when the driver lands THIS round's artifact
 # after close; scripts/round_close.py enforces the re-rotation at the
 # next round instead (ROTATION_ROUND must equal max artifact round + 1).
-ROTATION_ROUND: int = 17
+ROTATION_ROUND: int = 18
 
 # Keys REGISTERED during the current round, AFTER the window above was
 # computed (r14/r15 precedent: additions queue at the VP tail and head
-# the NEXT rotation). Round 17 is the semantics-frozen optimization
-# round (VERDICT r16 item 2): no new keys.
+# the NEXT rotation). The surface is frozen: no new keys.
 ROTATION_NEW_KEYS: tuple[str, ...] = ()
 
-# The r16 optimization blast radius (VERDICT r16 item 1, in its order):
-# keys whose physical plan or execution path round 16 rewrote and the
-# driver has not re-verified since. They jump the stale-cohort queue
-# for exactly one rotation; the rotation-policy test treats this pin as
-# the window head and checks the stale-cohort fill behind it.
+# The optimization blast radius: keys whose physical plan or worker
+# code changed without a driver re-verdict since. They jump the
+# stale-cohort queue for exactly one rotation; the rotation-policy test
+# treats this pin as the window head and checks the stale-cohort fill
+# behind it.
 ROTATION_BLAST_HEAD: tuple[str, ...] = (
-    "q_llm_simhash",  # Arrow signature fold (r16 §1)
-    "q_llm_simhash_banded",  # consumes the fold + 64-bit banding
-    "q_llm_simhash_banded128",  # new in r16 — never driver-checked
-    "q_llm_minhash_lsh",  # Arrow signature build (r16 §1b)
-    "q_llm_dedup_clusters",  # consume the rewritten signature memo
+    # r17 plan rewrites (VERDICT r17 item 1, in its order)
+    "q_agg_heavy_hitters",
+    "q_agg_basket_pairs",
+    "q_stream_stateful_alerts",
+    "q_graph_degree",
+    # functions/udfs.py worker bodies, no longer per-body fast-pathed
+    "q_udf_pandas_scalar",
+    "q_udf_grouped_agg",
+    "q_udf_iter_pandas",
+    "q_udf_grouped_map",
+    "q_udf_map_in_arrow",
+    "q_udf_grouped_arrow",
+    # llm/similarity.py bucket / cell / PQ kernels
+    "q_llm_sim_topk_lsh",
+    "q_llm_sim_topk_ivf",
+    "q_llm_sim_topk_pq",
+    # llm/dedup.py simhash/minhash folds and the block-pair top-k
+    "q_llm_simhash",
+    "q_llm_simhash_banded",
+    "q_llm_simhash_banded128",
+    "q_llm_minhash_lsh",
+    "q_llm_dedup_clusters",
     "q_llm_dedup_keep",
     "q_llm_dedup_incremental",
-    "q_graph_triangles",  # triangle_node_counts fold (r16 §6)
-    "q_graph_local_clustering",
-    "q_graph_pagerank",  # heap-scaled broadcast cap + gated hints
-    "q_graph_wcc",  # (r16 §2-3)
-    "q_graph_bfs",
-    "q_graph_kcore",
-    "q_graph_label_propagation",
-    "q_graph_landmark_closeness",
-    "q_graph_common_neighbors",  # exchange-free wedge groupBy (r16 §5)
-    "q_stream_update_mode",  # executor-side changelog fold (r16 §7)
+    "q_llm_embed_neardup",
+    # llm/multimodal.py feature / frame / audio fan-outs
+    "q_llm_multimodal",
+    "q_llm_multimodal_frames",
+    "q_llm_multimodal_audio",
+    # sources/python_ds.py reader and writer
+    "q_scan_python_ds",
+    "q_sink_python_ds",
 )
 
 VERIFICATION_PRIORITY: tuple[str, ...] = ROTATION_BLAST_HEAD + (
-    # r10-stale cohort, alphabetical, first 33 — fills the window to 50
-    "q_events_attribution",
-    "q_events_markov",
-    "q_filter_compare",
-    "q_fn_try_datetime",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_broadcast",
-    "q_join_full",
-    "q_join_fuzzy_block",
-    "q_join_inner_equi",
-    "q_join_left",
-    "q_join_range",
-    "q_join_right",
-    "q_join_semi",
-    "q_join_theta",
-    "q_llm_shard_assign",
-    "q_project",
-    "q_sample_weighted",
-    "q_scan_backfill_union",
-    "q_scan_multi_source",
-    "q_scan_parquet",
-    "q_set_symdiff",
-    "q_sort_multi",
-    "q_stream_cdc_apply",
-    "q_stream_corpus_ingest",
-    "q_topk_global",
-    "q_ts_cohort_ltv",
-    "q_ts_cusum",
-    "q_ts_time_bucket",
-    "q_win_frame_range",
-    "q_win_frame_rows",
-    "q_win_lag_lead",
-    "q_win_ranking",
-    # --- 50-key window boundary ---
-    # r10-stale remainder (queue for r18)
+    # r10-stale remainder
     "q_win_topk_group",
+    # r11-stale cohort, alphabetical, first 23 — fills the window to 50
+    "q_agg_collect",
+    "q_agg_count_min",
+    "q_agg_cube",
+    "q_agg_grouping_sets",
+    "q_agg_hist2d",
+    "q_agg_pivot",
+    "q_agg_rollup",
+    "q_distinct",
+    "q_dq_benford",
+    "q_events_anomaly_days",
+    "q_events_inter_arrival",
+    "q_events_path_topk",
+    "q_events_sequence_next",
+    "q_events_streaks",
+    "q_filter_in_between_like",
+    "q_filter_null",
+    "q_join_cross",
+    "q_join_spatial_grid",
+    "q_limit",
+    "q_llm_bpe_train",
+    "q_llm_chunk",
+    "q_llm_contamination",
+    "q_llm_corpus_prep",
+    # --- 50-key window boundary ---
+    # r11-stale remainder (queue for r19)
+    "q_llm_curriculum",
+    "q_llm_domain_stats",
+    "q_llm_exact_dedup",
+    "q_llm_fingerprint",
+    "q_llm_lang_id",
+    "q_llm_oov_rate",
+    "q_llm_pack",
+    "q_llm_quality",
+    "q_llm_quality_ensemble",
+    "q_llm_repetition",
+    "q_llm_sim_topk",
+    "q_llm_tokenizer_fertility",
+    "q_sql_view_chain",
+    "q_ts_drawdown",
+    "q_ts_vwap",
 )
 
 

@@ -307,12 +307,12 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     # Local-master fast paths (see _local_fast_path_conf):
-    # - Warm-fork Python daemon (r17, guide §4.5): workers are forked
-    #   from a daemon that already imported numpy/pandas/pyarrow and
-    #   applied workerfast.activate(), so respawned workers (the JVM
-    #   reaps the idle pool after a hardcoded 1 minute) cost a bare fork
-    #   instead of ~0.6 CPU-s of imports, and no task anywhere pays the
-    #   per-task zip re-scan / full-gc fixed costs. See fastdaemon.py.
+    # - Warm-fork Python daemon (r17, guide §4.5), the only home of the
+    #   worker fast path: workers fork from a daemon that pre-imported
+    #   numpy/pandas/pyarrow, patched out the zip re-scan and froze its
+    #   heap, so a respawn (the JVM reaps idle workers after a hardcoded
+    #   1 minute) is a bare fork and no task pays the per-task zip
+    #   re-scan / full-gc costs. Other masters run stock workers.
     # - Fork-free local filesystem (jvm/sparkgraft/fs): without libhadoop,
     #   Hadoop forks chmod/readlink on every checkpoint, state-store and
     #   part-file create/rename: 50-100 forks per micro-batch in the

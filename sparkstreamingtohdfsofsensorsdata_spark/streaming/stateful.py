@@ -42,9 +42,6 @@ def _alert_fn(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     (user_id,) = key
     run = state.get[0] if state.exists else 0
     batches = [pdf for pdf in pdfs if len(pdf)]
@@ -52,7 +49,8 @@ def _alert_fn(
         state.update((run,))
         return
     # r17 per-group diet: this function runs once per (user, micro-batch)
-    # — ~16k calls per replay at sf0.1 — so the per-call pandas overhead
+    # — 1.5k calls for the registered key's one-batch replay at sf0.1,
+    # ~18k for a 12-chunk replay — so the per-call pandas overhead
     # (concat copy + sort_values) was most of the key's Python CPU.
     # Single-batch groups skip the concat, and the (ts, event_id) sort
     # is a numpy lexsort over the already-extracted columns (identical
@@ -127,11 +125,6 @@ def user_stats_tws(events):
 
     class UserStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            from sparkstreamingtohdfsofsensorsdata_spark.workerfast import (
-                activate,
-            )
-
-            activate()
             self._state = handle.getValueState("stats", "n LONG, mx DOUBLE")
 
         def handleInputRows(self, key, rows, timer_values):

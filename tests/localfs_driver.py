@@ -1,17 +1,19 @@
-"""Subprocess driver for the local-filesystem fast-path tests.
+"""Subprocess driver for the local fast-path tests.
 
-Runs in a FRESH JVM (the driver classpath and the Hadoop filesystem
-classes are fixed at JVM launch, so the shared test session cannot be
-reused). Modes:
+Runs in a FRESH JVM (the driver classpath, the Hadoop filesystem
+classes and the Python daemon module are fixed at launch, so the shared
+test session cannot be reused). Modes:
 
 - ``nio``: the default session. Asserts the fork-free classes are
   installed and that a caller's ``spark.driver.extraClassPath`` was
   merged with theirs, then runs the file workload.
 - ``stock``: the two ``spark.hadoop.fs.*`` confs reset to Hadoop's
   stock classes, then the file workload.
-- ``degraded``: the compile helper returns None, as without a JDK.
-  Asserts the session falls back to Hadoop's own local filesystem and
-  that ``q_stream_sink`` still equals its DuckDB oracle.
+- ``degraded``: the compile helper returns None, as without a JDK, and
+  the warm-fork daemon is unreachable, as in a zip deploy. Asserts the
+  session falls back to Hadoop's own local filesystem and the stock
+  Python daemon, and that ``q_stream_sink`` and the Python-worker key
+  ``q_agg_heavy_hitters`` still equal their DuckDB oracles.
 
 The file workload, at sf0.001: a chunked replay directory, a stateful
 ``tumbling_counts`` stream into ``write_file_sink``, and a
@@ -84,6 +86,7 @@ def main() -> None:
         extra.update(STOCK_FS)
     elif mode == "degraded":
         session.compile_java = lambda source, classpath: None
+        session._fastdaemon_available = lambda: False
     spark = session.build_session(
         app_name=f"localfs-{mode}", master="local[2]", shuffle_partitions=2,
         extra_conf=extra,
@@ -103,9 +106,12 @@ def main() -> None:
         assert not fs_class.startswith("sparkgraft."), fs_class
         assert conf.get("spark.hadoop.fs.file.impl", None) is None
         assert conf.get("spark.driver.extraClassPath", None) is None
+        assert conf.get("spark.python.daemon.module", None) is None
     if mode == "degraded":
-        n, _ = run_parity_exact(spark, make_duck_views(SF_DIR), "q_stream_sink")
-        assert n > 0
+        duck = make_duck_views(SF_DIR)
+        for key in ("q_stream_sink", "q_agg_heavy_hitters"):
+            n, _ = run_parity_exact(spark, duck, key)
+            assert n > 0, key
     else:
         file_workload(spark, work)
     spark.stop()

@@ -2,6 +2,8 @@
 
 Two of them: the warm-fork Python daemon (``fastdaemon.py``) and the
 fork-free local filesystem (``jvm/sparkgraft/fs/NioLocalFileSystem``).
+The daemon patches the zip re-scan out and freezes its heap once,
+before it forks; every worker inherits both and never freezes again.
 Without the libhadoop native library, Hadoop's stock local filesystem
 runs ``chmod`` on every create/mkdir and ``readlink`` on every
 ``FileContext.rename``; the replacement answers both with java.nio and
@@ -19,6 +21,7 @@ import threading
 from pathlib import Path
 
 import pytest
+from conftest import SF_DIR
 from py4j.protocol import Py4JJavaError
 
 from sparkstreamingtohdfsofsensorsdata_spark import session
@@ -130,10 +133,82 @@ def test_file_workload_forks_no_chmod_or_readlink(tmp_path):
 
 
 def test_degraded_path_falls_back_to_stock_fs(tmp_path):
-    """Without compiled classes (no JDK, javac failure, zip deploy) the
-    session keeps Hadoop's stock LocalFileSystem, and a file-sink key
-    still equals its oracle."""
+    """Without compiled classes (no JDK, javac failure, zip deploy) and
+    without a reachable daemon module, the session keeps Hadoop's stock
+    LocalFileSystem and the stock Python daemon, and a file-sink key and
+    a Python-worker key still equal their oracles."""
     _run_driver("degraded", tmp_path / "degraded")
+
+
+# --- the warm-fork daemon's fast path, on the shared session ----------
+
+
+def _worker_probe(spark) -> list:
+    """One row per task of a ``mapInArrow`` stage with 4 tasks per core:
+    the worker's pid, its frozen-object count, how many zipimporters it
+    caches for the Spark-distro zips, and how many of those still have
+    the stock (re-scanning) ``invalidate_caches``. Zips shipped by
+    ``addPyFile`` (under the SparkFiles root) get fresh finders on
+    purpose and are not counted."""
+
+    def probe(batches):
+        import gc
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+        from pyspark.files import SparkFiles
+
+        for _ in batches:
+            pass
+        shipped = SparkFiles.getRootDirectory()
+        zips = [
+            f for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter) and not f.archive.startswith(shipped)
+        ]
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()],
+            "frozen": [gc.get_freeze_count()],
+            "zips": [len(zips)],
+            "unpatched": [sum("invalidate_caches" not in vars(f) for f in zips)],
+        })
+
+    n = 4 * spark.sparkContext.defaultParallelism
+    return spark.range(n, numPartitions=n).mapInArrow(
+        probe, "pid long, frozen long, zips long, unpatched long"
+    ).collect()
+
+
+def test_forked_workers_inherit_the_fast_path(spark):
+    """Every worker forked by the daemon starts with a frozen heap and
+    with every distro zipimporter's re-scan patched out."""
+    assert spark.conf.get("spark.python.daemon.module") == session.FASTDAEMON_MODULE
+    rows = _worker_probe(spark)
+    assert all(r.frozen > 0 for r in rows), rows
+    assert all(r.zips > 0 and r.unpatched == 0 for r in rows), rows
+
+
+def test_workers_freeze_once_per_process(spark):
+    """Running Python-worker kernels never grows a worker's frozen set:
+    only the daemon freezes, once, before it forks. The frozen count
+    only shrinks as frozen objects are freed, so a later probe of the
+    same pid must read no more than an earlier one."""
+    from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all
+
+    assert spark.conf.get("spark.python.daemon.module") == session.FASTDAEMON_MODULE
+    before = _worker_probe(spark)
+    load_all()["q_agg_heavy_hitters"].fn(spark, SF_DIR).collect()
+    for _ in range(5):
+        after = _worker_probe(spark)
+        common = {r.pid for r in before} & {r.pid for r in after}
+        if common:
+            break
+    assert common, "no worker served both probes"
+    for pid in common:
+        earlier = min(r.frozen for r in before if r.pid == pid)
+        later = max(r.frozen for r in after if r.pid == pid)
+        assert later <= earlier, (pid, earlier, later)
 
 
 # --- semantics against the stock classes, on the shared session -------
